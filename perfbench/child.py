@@ -64,17 +64,14 @@ def main(cfg: dict) -> dict:
     result["setup_end"] = time.time()
     result["cold_pass_s"] = cold_s
     discard(kept)
-    for i in range(1, 1 + cfg["warmup"]):
-        discard(one(i, False)[1])
-    base = 1 + cfg["warmup"]
     passes = []
     steal0 = steal_jiffies()
-    for k in range(cfg["timed"] * (2 if traced else 1)):
+    for k in range(cfg["timed"]):
         # traced runs alternate untraced and traced passes, so drift
         # over the run weighs both alike
         trace_this = traced and k % 2 == 1
-        dt, kept, span_ids = one(base + k, trace_this)
-        passes.append({"index": base + k, "seconds": dt, "traced": trace_this,
+        dt, kept, span_ids = one(1 + k, trace_this)
+        passes.append({"index": 1 + k, "seconds": dt, "traced": trace_this,
                        "output": kept, "spans": span_ids})
     result["steal_share"] = steal_share(steal0, steal_jiffies())
     result["passes"] = passes

@@ -6,15 +6,16 @@ Run from the root of a checkout. It generates the workload's inputs from
 ``--seed`` under ``.bench_work/``, computes the expected outputs, then
 starts ``child.py`` (one Spark driver on ``local[<cores>]``, a closed
 loop with one client) which runs: set-up (session start, registration
-and the cold first pass), a fixed number of warm-up passes, then a fixed
-number of timed passes. Pass counts depend only on ``--seconds`` and
-the workload, never on measured speed, so every commit runs the same
-passes. Every timed pass's sinks are checked after the child exits.
+and the cold first pass), then a fixed number of timed passes. Pass
+counts depend only on ``--seconds`` and the workload, never on measured
+speed, so every commit runs the same passes. Every timed pass's sinks
+are checked after the child exits.
 
 ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` runs the
-same passes, alternating untraced and traced ones, and prints the
-per-layer metrics (spans go to ``.bench_out/``). ``--smoke`` shrinks the
-inputs and pass counts for the self-tests. See README.md.
+same passes (at least two), alternating untraced and traced ones, and
+prints the per-layer metrics (spans go to ``.bench_out/``).
+``--smoke`` shrinks the inputs and pass counts for the self-tests. See
+README.md.
 """
 
 from __future__ import annotations
@@ -40,25 +41,27 @@ from metrics import per_layer_metrics  # noqa: E402
 
 #: inputs per workload: (full, smoke)
 SIZES = {
-    "images": (inputs.ImagesSpec(inputs.FrameSpec(frames=48, size=192, blobs=16),
-                                 inputs.PlateSpec(plates=6, wells=64, size=24)),
+    "images": (inputs.ImagesSpec(inputs.FrameSpec(frames=32, size=192, blobs=16),
+                                 inputs.PlateSpec(plates=4, wells=64, size=24)),
                inputs.ImagesSpec(inputs.FrameSpec(frames=4, size=64, blobs=4),
                                  inputs.PlateSpec(plates=2, wells=4, size=16))),
     "corpus_queries": (inputs.CorpusSpec(), inputs.CorpusSpec(docs=80, sources=8)),
 }
-#: (warm-up passes, timed passes per 10 s of --seconds). Constants: a
-#: faster commit runs the same passes, it does not run more of them.
-#: They are small because set-up (a JVM start and a cold pass of 20-40 s)
-#: dominates each run; see README.md for the run-time budget.
+#: timed passes per 10 s of --seconds. Constants: a faster commit runs
+#: the same passes, it does not run more of them. Three, so that the
+#: median drops the slowest pass (the first one after set-up, or one a
+#: burst of host contention hit); no more, because set-up (a JVM start
+#: and a cold pass of 15-40 s) dominates each run. See README.md for the
+#: run-time budget.
 PASSES = {
-    "images": (1, 3),
-    "corpus_queries": (0, 1),
+    "images": 3,
+    "corpus_queries": 3,
 }
 RUN_LIMIT_S = 170.0
 
 
 def timed_passes(workload: str, seconds: int) -> int:
-    return max(1, round(seconds * PASSES[workload][1] / 10))
+    return max(1, round(seconds * PASSES[workload] / 10))
 
 
 def process_tree_pss_kb(pid: int) -> int:
@@ -219,8 +222,10 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     spec = SIZES[args.workload][1 if args.smoke else 0]
-    warmup = 0 if args.smoke else PASSES[args.workload][0]
     timed = 1 if args.smoke else timed_passes(args.workload, args.seconds)
+    if args.trace:
+        # untraced and traced passes alternate: at least one of each
+        timed = max(2, timed)
     work = os.path.join(ROOT, ".bench_work", f"{args.workload}-s{args.seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "out"))
@@ -229,7 +234,7 @@ def main(argv: list[str] | None = None) -> int:
         cfg = {
             "workload": args.workload, "trace": bool(args.trace), "cpus": len(os.sched_getaffinity(0)),
             "inputs": child_inputs, "out_root": os.path.join(work, "out"),
-            "warmup": warmup, "timed": timed, "result": os.path.join(work, "result.json"),
+            "timed": timed, "result": os.path.join(work, "result.json"),
         }
         probe_ms = host_probe_ms()
         result, t_start, peak_mb = run_child(cfg, work, t_begin + RUN_LIMIT_S)
@@ -239,7 +244,7 @@ def main(argv: list[str] | None = None) -> int:
             a, f = check_pass(args.workload, p["output"], expected, spec)
             attempted, failed = attempted + a, failed + f
         untraced = [p["seconds"] for p in result["passes"] if not p["traced"]]
-        print(f"perfbench: {args.workload} seed={args.seed} warmup={warmup} "
+        print(f"perfbench: {args.workload} seed={args.seed} "
               f"timed={len(untraced)} cold_pass_s={result['cold_pass_s']:.4f} "
               f"steal_share={result['steal_share']:.5f} host_probe_ms={probe_ms:.1f}")
         print("perfbench: pass_s " + " ".join(
