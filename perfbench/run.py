@@ -162,7 +162,7 @@ def host_probe_ms() -> float:
 
 def run_child(cfg: dict, work: str, deadline: float) -> tuple[dict, float, float]:
     """Start the measured process; return (its result, its start time,
-    peak PSS in MB)."""
+    peak PSS in MB, sampled in traced runs only)."""
     cfg_path = os.path.join(work, "config.json")
     with open(cfg_path, "w") as fh:
         json.dump(cfg, fh)
@@ -179,15 +179,19 @@ def run_child(cfg: dict, work: str, deadline: float) -> tuple[dict, float, float
         child = subprocess.Popen([sys.executable, os.path.join(HERE, "child.py"), cfg_path],
                                  cwd=work, env=env, stdout=log, stderr=subprocess.STDOUT,
                                  start_new_session=True)
+        # peak memory is a per-layer metric; reading every process's
+        # smaps in untraced runs would only disturb the timed passes
         sampler = PeakPss(child.pid)
-        sampler.start()
+        if cfg["trace"]:
+            sampler.start()
         try:
             code = child.wait(timeout=max(1.0, deadline - time.time()))
         except subprocess.TimeoutExpired:
             code = None
         finally:
             sampler.done.set()
-            sampler.join()
+            if sampler.is_alive():
+                sampler.join()
             # the child exits without stopping Spark; the JVM and the
             # Python workers share its process group
             try:
