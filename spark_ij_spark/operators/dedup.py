@@ -1628,7 +1628,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass (explode of a CASE-built array) — the r11 form cached the
     # full pre-threshold pair frame and scanned it twice (fwd UNION
     # rev); dropping that cache + double scan measured 3.37 -> 2.23 s
-    # cold at sf0.1 (tools/exp2_r12.py, identical results asserted).
+    # cold at sf0.1 (OPTIMIZATION_r12.md, identical results asserted).
     pairs = _jaccard_pairs(shingle_postings(spark, sf_dir))
     fwd_ok = (
         f"{CONTAIN_T_DEN} * i >= {CONTAIN_T_NUM} * na"

@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from spark_ij_spark.session import load_tables
+from spark_ij_spark.session import load_tables, spread
 from spark_ij_spark.streaming import events as se
 
 from .conftest import SF_DIR
@@ -584,3 +584,9 @@ def test_hwm_scan_skips_invalid_readings():
     pdf2 = pdf.iloc[[0, 2, 3]]
     assert se._hwm_scan((42,), pdf2, None, out2) is None
     assert out2 == []
+
+
+def test_spread_leaves_a_streaming_frame_alone(spark):
+    """A streaming frame has no RDD to probe; spread returns it as is."""
+    stream = se.read_events_stream(spark, SF_DIR)
+    assert spread(stream, "event_id") is stream
